@@ -170,6 +170,14 @@ def brute_force_topk_batch(
     if mask_col is not None:
         if query_masks is None:
             raise ValueError("mask_col requires query_masks")
+        # a missing id would raise a bare KeyError below; an empty mask
+        # would silently screen the query down to nothing
+        unmasked = [qid for qid in qids if not query_masks.get(qid)]
+        if unmasked:
+            raise ValueError(
+                f"query_masks has no allowed mask values for query "
+                f"id(s) {unmasked}"
+            )
         mask_arrays = [np.asarray(sorted(query_masks[qid])) for qid in qids]
 
     def _screen(batches):

@@ -40,6 +40,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import json
 import os
@@ -49,6 +50,27 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+@dataclasses.dataclass(frozen=True)
+class _Snapshot:
+    """One resolved table state — the value every read plans from (the
+    Delta model: a read is a snapshot of the log, and "latest" is just
+    the newest one). Built only by ``ParquetUpsertSink._resolve``.
+
+    ``entries`` maps each partition DIR PATH to its metadata entry
+    (data file names, file stats, deletion vector, bloom — see
+    ``_dir_entry``); ``schema`` is the logical schema the scan applies
+    (a version's omits the directory-encoded ``part_date``); ``epoch``
+    is the committed version, None for the live table; ``root`` is the
+    directory the partition dirs live under (the table, or an OCC /
+    OPTIMIZE pin) and None for a version, whose dirs span epoch
+    copies."""
+
+    entries: dict[str, dict]
+    schema: object
+    epoch: int | None
+    root: str | None
 
 
 # lock paths this PROCESS currently holds (re-entrancy source of truth;
@@ -449,34 +471,26 @@ class ParquetUpsertSink:
             # and the new epoch's manifest points at the SOURCE
             # version's existing immutable copies (zero new log data).
             # All idempotent JSON publishes — a crash replays them.
-            if restore.get("schema") is not None:
-                self._atomic_json_write(
-                    self._schema_file(), restore["schema"]
-                )
-                self._atomic_json_write(
-                    self._epoch_schema_path(restore["epoch"]),
-                    restore["schema"],
-                )
-            else:
-                # restoring a legacy pre-sidecar version: its schema is
-                # whatever its homogeneous files carry — leaving the
-                # current evolved _schema.json in place would read the
-                # restored table under the POST-restore schema,
-                # diverging from the restore-schema semantics sidecar-
-                # bearing versions get (ADVICE r8)
-                try:
-                    os.remove(self._schema_file())
-                except FileNotFoundError:
-                    pass
+            self._atomic_json_write(self._schema_file(), restore["schema"])
+            self._atomic_json_write(
+                self._epoch_schema_path(restore["epoch"]), restore["schema"]
+            )
             self._atomic_json_write(
                 self._partspec_file(), restore["specs"]
             )
             if self.snapshot_dir is not None:
+                # a staging without the folded entries refolds them
+                # from the just-installed dirs: hardlinks of the same
+                # immutable copies, so the entries are identical
+                sidecars = restore.get("sidecars") or {
+                    d: self._dir_entry(os.path.join(self.path, d))
+                    for d in restore["parts"]
+                }
                 self._publish_manifest(
                     restore["epoch"],
                     restore["parts"],
                     op="restore",
-                    sidecars=restore.get("sidecars"),
+                    sidecars=sidecars,
                 )
                 # a restore is a commit like any other: apply the
                 # retention bound here too, or a max_snapshots table
@@ -535,8 +549,8 @@ class ParquetUpsertSink:
                     f"as_epoch {new_epoch} must exceed the newest "
                     f"retained epoch {retained[-1]}"
                 )
-            parts = self._load_manifest(epoch_id)
-            schema = self._epoch_schema(epoch_id)
+            manifest = self._manifest(epoch_id)
+            parts = manifest["parts"]
             staging = self._migrate_staging()
             shutil.rmtree(staging, ignore_errors=True)
             os.makedirs(staging, exist_ok=True)
@@ -550,12 +564,12 @@ class ParquetUpsertSink:
                 {
                     "epoch": new_epoch,
                     "parts": parts,
-                    "schema": None if schema is None else schema.jsonValue(),
+                    "schema": self._epoch_schema(epoch_id).jsonValue(),
                     "specs": self._transforms(),
                     # the restored version's folded metadata carries
                     # over verbatim — the new manifest points at the
-                    # same immutable copies (None for legacy sources)
-                    "sidecars": self._load_manifest_sidecars(epoch_id),
+                    # same immutable copies
+                    "sidecars": manifest["sidecars"],
                 },
             )
             open(os.path.join(staging, "_SUCCESS"), "w").close()
@@ -1443,9 +1457,9 @@ class ParquetUpsertSink:
         # RAW positional scan: stored-schema read (NULL-fills evolved
         # columns) + the hidden _metadata source column; DVs are not
         # applied so replays re-find already-hidden rows (idempotence)
-        raw = self._read_table(
-            spark, apply_dv=False, with_positions=True
-        ).select(*self.key_cols, "part_date", "__dv_path", "__dv_pos")
+        raw = self._scan(
+            spark, self._resolve(spark), keep_part_date=True, positions=True
+        ).select(*self.key_cols, "part_date", "__dv_dir", "__dv_file", "__dv_pos")
         if self.partition_source in self.key_cols:
             # prune the discovery scan to partitions the keys derive
             # (same locality contract as the copy-on-write delete)
@@ -1461,12 +1475,12 @@ class ParquetUpsertSink:
                 return
             raw = raw.filter(self._part_date_filter(touched_vals))
         doomed = self._semi_join_keys(raw, staged_keys).select(
-            "__dv_path", "__dv_pos"
+            "__dv_dir", "__dv_file", "__dv_pos"
         )
         # one output row per touched FILE (collect_list bounds driver
         # traffic to the doomed positions themselves)
         per_file = (
-            doomed.groupBy("__dv_path")
+            doomed.groupBy("__dv_dir", "__dv_file")
             .agg(F.sort_array(F.collect_list("__dv_pos")).alias("__dv_positions"))
             .collect()
         )
@@ -1475,12 +1489,7 @@ class ParquetUpsertSink:
             return
         delta: dict[str, dict[str, list[int]]] = {}
         for row in per_file:
-            parts = row["__dv_path"].split("/")
-            fname = parts[-1]
-            part_dir = next(
-                p for p in reversed(parts) if p.startswith("part_date=")
-            )
-            delta.setdefault(part_dir, {})[fname] = [
+            delta.setdefault(row["__dv_dir"], {})[row["__dv_file"]] = [
                 int(p) for p in row["__dv_positions"]
             ]
         # the atomic commit-intent publish: present+parseable == complete
@@ -1530,10 +1539,23 @@ class ParquetUpsertSink:
         os.remove(self._dv_pending_file())
         return epoch_id
 
-    def _dv_map(self, dirs: list[str]) -> dict[tuple[str, str], list[int]]:
-        """(partition dirname, file name) -> deleted row indexes,
-        unioned over the ``_dv.json`` sidecars in ``dirs``. The
-        partition dirname MUST be part of the key: one Spark write
+    def _apply_dv(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        entries: dict[str, dict],
+        positions: bool = False,
+    ) -> DataFrame:
+        """Filter DV-deleted rows out of a fresh file-source scan: a
+        broadcast ANTI-join on (partition dirname, file name, row
+        index) against the doomed positions the snapshot's entries
+        carry — plans as one BroadcastHashJoin, no shuffle of the
+        table side, and vanishes entirely (df returned untouched) when
+        no vectors exist, keeping the hot path free. ``positions``
+        instead attaches the three key columns and applies nothing
+        (the DV delete's own discovery scan).
+
+        The partition dirname MUST be part of the key: one Spark write
         task emits the SAME part-file name into every partition it
         touches (``part_date=A/part-00003-<uuid>`` and ``part_date=B/
         part-00003-<uuid>`` coexist), so a name-only vector would
@@ -1542,70 +1564,31 @@ class ParquetUpsertSink:
         hardlinked snapshot copy (``.../epoch=N/part_date=A/part-...``
         keeps both trailing path elements), which is what lets one
         sidecar serve both."""
-        out: dict[tuple[str, str], list[int]] = {}
-        for d in dirs:
-            sidecar = os.path.join(d, "_dv.json")
-            if not os.path.exists(sidecar):
-                continue
-            try:
-                with open(sidecar) as fh:
-                    loaded = json.load(fh)
-            except ValueError:
-                continue  # torn legacy artifact: atomic writes can't produce one
-            part_dir = os.path.basename(d.rstrip("/"))
-            for fname, positions in loaded.items():
-                out[(part_dir, fname)] = positions
-        return out
-
-    def _apply_dv(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        dv: dict[tuple[str, str], list[int]],
-    ) -> DataFrame:
-        """Filter DV-deleted rows out of a fresh file-source scan: a
-        broadcast ANTI-join on (partition dirname, file name, row
-        index) against the doomed-position relation — plans as one
-        BroadcastHashJoin, no shuffle of the table side, and vanishes
-        entirely (df returned untouched) when no vectors exist,
-        keeping the hot path free."""
-        if not dv:
-            return df
         pairs = [
-            (d, n, int(p)) for (d, n), positions in dv.items() for p in positions
+            (os.path.basename(d.rstrip("/")), n, int(p))
+            for d, e in entries.items()
+            for n, dv in (e.get("dv") or {}).items()
+            for p in dv
         ]
-        doomed = spark.createDataFrame(
-            pairs, "__dv_dir string, __dv_file string, __dv_pos bigint"
-        )
+        if not (pairs or positions):
+            return df
         cols = df.columns
         split = F.split(F.col("_metadata.file_path"), "/")
-        return (
+        df = (
             df.withColumn("__dv_dir", F.element_at(split, -2))
             .withColumn("__dv_file", F.element_at(split, -1))
             .withColumn("__dv_pos", F.col("_metadata.row_index"))
-            .join(
-                F.broadcast(doomed),
-                ["__dv_dir", "__dv_file", "__dv_pos"],
-                "left_anti",
-            )
-            .select(*cols)
         )
-
-    def _live_dv_map(self) -> dict[tuple[str, str], list[int]]:
-        if not os.path.isdir(self.path):
-            return {}
-        # one plan-time read of the consolidated cache; per-dir sidecar
-        # sweep only for tables last written by pre-fold code
-        cons = self._consolidated()
-        if cons is not None:
-            return self._dv_from_entries(cons)
-        return self._dv_map(
-            [
-                os.path.join(self.path, d)
-                for d in os.listdir(self.path)
-                if d.startswith("part_date=")
-            ]
+        if positions:
+            return df
+        doomed = spark.createDataFrame(
+            pairs, "__dv_dir string, __dv_file string, __dv_pos bigint"
         )
+        return df.join(
+            F.broadcast(doomed),
+            ["__dv_dir", "__dv_file", "__dv_pos"],
+            "left_anti",
+        ).select(*cols)
 
     def _semi_join_keys(self, left: DataFrame, keys: DataFrame) -> DataFrame:
         """``left`` restricted to rows whose key appears in ``keys`` —
@@ -1716,16 +1699,43 @@ class ParquetUpsertSink:
         return os.path.join(self.snapshot_dir, "schemas", f"epoch={epoch_id}.json")
 
     def _epoch_schema(self, epoch_id: int):
-        """Schema of a committed version, or None for snapshots written
-        before sidecars existed (homogeneous by construction)."""
-        return self._load_schema(self._epoch_schema_path(epoch_id))
+        """Schema of a committed version (every snapshot publishes its
+        schema sidecar before its manifest)."""
+        path = self._epoch_schema_path(epoch_id)
+        schema = self._load_schema(path)
+        if schema is None:
+            raise ValueError(f"snapshot schema {path} is missing")
+        return schema
+
+    _MANIFEST_KEYS = ("parts", "committed_at", "op", "sidecars")
+
+    def _manifest(self, epoch_id: int) -> dict:
+        """The one manifest parser: ``parts`` (partition dir -> epoch
+        whose copy holds it), ``committed_at`` (the first publish's
+        time), ``op`` and ``sidecars`` (each part's folded metadata
+        entry). Every writer publishes all four, so anything else —
+        torn JSON, a missing key, a part without its entry — raises
+        ValueError naming the file; a missing file raises
+        FileNotFoundError."""
+        path = self._manifest_path(epoch_id)
+        with open(path) as fh:
+            try:
+                data = json.load(fh)
+            except ValueError:
+                data = None
+        if (
+            not isinstance(data, dict)
+            or any(k not in data for k in self._MANIFEST_KEYS)
+            or not set(data["parts"]) <= set(data["sidecars"])
+        ):
+            raise ValueError(
+                f"unreadable manifest {path}: expected a JSON object "
+                f"with {list(self._MANIFEST_KEYS)} and an entry per part"
+            )
+        return data
 
     def _load_manifest(self, epoch_id: int) -> dict[str, int]:
-        with open(self._manifest_path(epoch_id)) as fh:
-            data = json.load(fh)
-        # legacy manifests are a bare {dir: epoch} map; current ones
-        # wrap it with the first-publish commit timestamp
-        return data["parts"] if isinstance(data, dict) and "parts" in data else data
+        return self._manifest(epoch_id)["parts"]
 
     def _manifest_committed_at(self, epoch_id: int) -> float:
         """Commit time of a snapshot: the timestamp recorded INSIDE the
@@ -1733,22 +1743,19 @@ class ParquetUpsertSink:
         identical parts on idempotent epoch replays and by
         _heal_migration_snapshot; using the file's mtime would refresh
         the clock on every rewrite and silently extend time-based
-        retention. Legacy bare-map manifests fall back to mtime."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict) and "committed_at" in data:
-                return float(data["committed_at"])
-        except (FileNotFoundError, ValueError):
-            pass
-        return os.path.getmtime(self._manifest_path(epoch_id))
+        retention."""
+        return float(self._manifest(epoch_id)["committed_at"])
+
+    def _manifest_op(self, epoch_id: int) -> str:
+        """Operation recorded at a version's publish."""
+        return str(self._manifest(epoch_id)["op"])
 
     def _publish_manifest(
         self,
         epoch_id: int,
         parts: dict[str, int],
-        op: str = "merge",
-        sidecars: dict[str, dict] | None = None,
+        op: str,
+        sidecars: dict[str, dict],
     ) -> None:
         """Atomic manifest publish (the commit point), PRESERVING the
         first publish's commit timestamp across replays/heals and
@@ -1758,29 +1765,18 @@ class ParquetUpsertSink:
         deletion vectors) INTO the manifest — the Delta-checkpoint /
         Iceberg-manifest design — so a time-travel plan needs ONE JSON
         read instead of O(partitions) sidecar opens (VERDICT r9
-        item 4). None omits the key (legacy manifests; reads fall back
-        to per-dir sidecar files)."""
+        item 4)."""
         try:
             committed_at = self._manifest_committed_at(epoch_id)
         except FileNotFoundError:
             committed_at = time.time()
-        payload = {"parts": parts, "committed_at": committed_at, "op": op}
-        if sidecars is not None:
-            payload["sidecars"] = sidecars
+        payload = {
+            "parts": parts,
+            "committed_at": committed_at,
+            "op": op,
+            "sidecars": sidecars,
+        }
         self._atomic_json_write(self._manifest_path(epoch_id), payload)
-
-    def _load_manifest_sidecars(self, epoch_id: int) -> dict[str, dict] | None:
-        """The per-partition metadata entries folded into a version's
-        manifest, or None for manifests published before the fold
-        existed (reads then fall back to per-dir sidecar files)."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict):
-                return data.get("sidecars")
-        except (FileNotFoundError, ValueError):
-            pass
-        return None
 
     # -- consolidated per-partition metadata (one plan-time read) ----------
     def _sidecars_file(self) -> str:
@@ -1876,40 +1872,6 @@ class ParquetUpsertSink:
                 current.pop(d, None)
         self._atomic_json_write(self._sidecars_file(), current)
 
-    @staticmethod
-    def _dv_from_entries(
-        entries: dict[str, dict]
-    ) -> dict[tuple[str, str], list[int]]:
-        """Consolidated entries -> the (partition dirname, file name)
-        -> deleted-row-indexes map ``_apply_dv`` consumes. Entries are
-        keyed by dir PATH or dirname; only the basename matters (it
-        matches ``_metadata.file_path``'s parent for live files and
-        hardlinked epoch copies alike)."""
-        out: dict[tuple[str, str], list[int]] = {}
-        for d, e in entries.items():
-            part_dir = os.path.basename(d.rstrip("/"))
-            for fname, positions in (e.get("dv") or {}).items():
-                out[(part_dir, fname)] = positions
-        return out
-
-    def _entries_for_dirs(self, dirs: list[str]) -> dict[str, dict]:
-        """Legacy fallback: build entries by listing each dir (the
-        pre-fold O(partitions) path — only taken when neither the
-        consolidated file nor manifest sidecars exist)."""
-        return {d: self._dir_entry(d) for d in dirs if os.path.isdir(d)}
-
-    def _manifest_op(self, epoch_id: int) -> str:
-        """Operation recorded at a version's publish ('merge' for
-        legacy bare-map manifests)."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict) and "op" in data:
-                return str(data["op"])
-        except (FileNotFoundError, ValueError):
-            pass
-        return "merge"
-
     def _snapshot(
         self,
         spark: SparkSession,
@@ -1929,8 +1891,10 @@ class ParquetUpsertSink:
         if self.snapshot_dir is None:
             return
         prev_epochs = [e for e in self.snapshots() if e < epoch_id]
-        prev: dict[str, int] = (
-            self._load_manifest(prev_epochs[-1]) if prev_epochs else {}
+        prev = (
+            self._manifest(prev_epochs[-1])
+            if prev_epochs
+            else {"parts": {}, "sidecars": {}}
         )
         if touched is None or not prev_epochs:
             # first snapshot (or unknown baseline): capture every
@@ -1940,12 +1904,8 @@ class ParquetUpsertSink:
                 d for d in os.listdir(self.path) if d.startswith("part_date=")
             ]
         epoch_files = os.path.join(self.snapshot_dir, "files", f"epoch={epoch_id}")
-        manifest = dict(prev)
-        sidecars: dict[str, dict] = dict(
-            (self._load_manifest_sidecars(prev_epochs[-1]) or {})
-            if prev_epochs
-            else {}
-        )
+        manifest: dict[str, int] = dict(prev["parts"])
+        sidecars: dict[str, dict] = dict(prev["sidecars"])
         for d in touched:
             src = os.path.join(self.path, d)
             if not os.path.isdir(src):
@@ -1964,14 +1924,6 @@ class ParquetUpsertSink:
             # hardlinked) — its entry folds into the manifest so a
             # time-travel plan reads one JSON, not O(dirs) sidecars
             sidecars[d] = self._dir_entry(src)
-        # first snapshot after an upgrade from pre-fold manifests:
-        # inherited dirs have no folded entry yet — build each from its
-        # immutable epoch copy, once (every later commit inherits)
-        for d, e in manifest.items():
-            if d not in sidecars:
-                sidecars[d] = self._dir_entry(
-                    os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-                )
         # schema sidecar first: the manifest publish is the commit
         # point, and a committed version must know its schema AS OF
         # that commit (time travel across an evolution boundary shows
@@ -2077,34 +2029,137 @@ class ParquetUpsertSink:
         full-table materialization ever happened. Raises below the
         retention horizon — an expired version is gone, exactly like a
         vacuumed Delta/Iceberg version."""
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            if retained:
-                raise ValueError(
-                    f"epoch {epoch_id} precedes the retention horizon "
-                    f"(oldest retained snapshot: {retained[0]}, "
-                    f"max_snapshots={self.max_snapshots})"
-                )
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        paths = [
-            os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            for d, e in sorted(manifest.items())
-        ]
-        # deletion vectors come from the manifest's folded metadata —
-        # the same JSON read that resolved the parts — so the plan
-        # costs zero per-dir sidecar opens; None (legacy manifest)
-        # falls back to the per-dir sweep inside _read_snapshot_paths
-        folded = self._load_manifest_sidecars(eligible[-1])
-        dv = (
-            self._dv_from_entries(
-                {d: folded[d] for d in manifest if d in folded}
+        return self._scan(spark, self._resolve(spark, epoch_id))
+
+    def _resolve(
+        self, spark: SparkSession, epoch_id: int | None = None, pin=None
+    ) -> _Snapshot:
+        """The one resolver: every read plans from the ``_Snapshot`` it
+        returns, at the cost of ONE metadata read.
+
+        - live (the default): finish a crashed swap first
+          (``_repair_for_read``), then read ``_sidecars.json``;
+        - ``epoch_id``: read the manifest of the newest retained
+          version <= ``epoch_id`` — its parts name the epoch copies,
+          its folded entries carry their metadata — under the
+          version's schema sidecar. ``part_date`` is a
+          directory-encoded partition column, physically absent from
+          the copied files (and from what ``read_at`` has always
+          returned), so it is dropped from that schema. Below the
+          retention horizon raises;
+        - ``pin=(root, schema)``: an OCC / OPTIMIZE pin — hardlinked
+          copies of live dirs under a private root, read under the
+          schema the caller validated.
+
+        A root without ``_sidecars.json`` (a pin, or a table whose
+        cache is missing) lists each dir instead: the cache is a
+        plan-cost optimization, never a correctness dependency."""
+        from pyspark.sql.types import StructType
+
+        if epoch_id is not None:
+            retained = self.snapshots()
+            eligible = [e for e in retained if e <= epoch_id]
+            if not eligible:
+                if retained:
+                    raise ValueError(
+                        f"epoch {epoch_id} precedes the retention horizon "
+                        f"(oldest retained snapshot: {retained[0]}, "
+                        f"max_snapshots={self.max_snapshots})"
+                    )
+                raise ValueError(f"no snapshot at or before epoch {epoch_id}")
+            epoch = eligible[-1]
+            manifest = self._manifest(epoch)
+            files = os.path.join(self.snapshot_dir, "files")
+            schema = self._epoch_schema(epoch)
+            return _Snapshot(
+                {
+                    os.path.join(files, f"epoch={e}", d): manifest["sidecars"][d]
+                    for d, e in sorted(manifest["parts"].items())
+                },
+                StructType([f for f in schema.fields if f.name != "part_date"]),
+                epoch,
+                None,
             )
-            if folded is not None
-            else None
+        if pin is None:
+            self._repair_for_read(spark)
+            root, schema, cons = self.path, self._stored_schema(), self._consolidated()
+        else:
+            (root, schema), cons = pin, None
+        if cons is None:
+            names = os.listdir(root) if os.path.isdir(root) else []
+            cons = {
+                d: self._dir_entry(os.path.join(root, d))
+                for d in names
+                if d.startswith("part_date=")
+            }
+        return _Snapshot(
+            {os.path.join(root, d): e for d, e in sorted(cons.items())},
+            schema,
+            None,
+            root,
         )
-        return self._read_snapshot_paths(spark, paths, eligible[-1], dv_map=dv)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        snap: _Snapshot,
+        paths: list[str] | None = None,
+        pred=None,
+        keep_part_date: bool = False,
+        positions: bool = False,
+    ) -> DataFrame:
+        """The one scan composer: schema → parquet → deletion-vector
+        anti-join → logical names → ``pred`` → drop ``part_date``.
+
+        - **schema**: the snapshot's, applied explicitly. After an
+          evolution commit only the touched partitions physically
+          carry the new column (and a version's copies referenced
+          across the boundary may predate it); a footer-sampled read
+          could silently drop it, the explicit schema NULL-fills it —
+          one tiny JSON read, never a footer sweep.
+        - **paths**: ``paths`` (the files a pruned or point read
+          selected), else the whole snapshot — the root of a live
+          table or pin, the partition dirs of a version. Spark's
+          planning cost depends on the paths passed (more than 32
+          start a listing job), so a full read never passes files.
+          Nothing to scan (a version a full erasure emptied, a probe
+          that selected no file) composes the empty relation from the
+          schema instead of handing ``spark.read`` zero paths.
+        - **deletion vectors** come from the snapshot's entries. Each
+          epoch copy carries its vector AS OF that commit (the sidecar
+          republishes via os.replace, so hardlinked copies pin the old
+          vector), which makes time travel, CDF and history
+          merge-on-read-aware with zero extra machinery.
+          ``positions`` attaches the row addresses instead.
+        - **logical names** (column mapping): a version below a RENAME
+          reads its original column names.
+        - ``part_date`` stays only for writer-side reads
+          (``keep_part_date``), typed by the stored schema."""
+        self._invalidate_listing(spark)
+        if snap.root not in (None, self.path):
+            spark.catalog.refreshByPath(snap.root)  # pin roots are reused
+        schema = snap.schema
+        if paths is None:
+            paths = sorted(snap.entries) if snap.root is None else [snap.root]
+        if schema is not None and not (snap.entries and paths):
+            df = spark.createDataFrame([], schema)
+        else:
+            reader = spark.read
+            if snap.root is not None:
+                reader = reader.option("basePath", snap.root)
+            if schema is not None:
+                reader = reader.schema(self._physical_schema(schema))
+            # a schema-less table (written before _schema.json) whose
+            # probe selected nothing scans its root: pred still holds
+            df = reader.parquet(*(paths or [snap.root]))
+            # DVs first, while df is still the raw scan and the hidden
+            # _metadata column resolves
+            df = self._to_logical(
+                self._apply_dv(spark, df, snap.entries, positions), schema
+            )
+        if pred is not None:
+            df = df.filter(pred)
+        return df if keep_part_date else df.drop("part_date")
 
     def clone(
         self,
@@ -2175,20 +2230,16 @@ class ParquetUpsertSink:
     def describe_history(self, spark: SparkSession) -> DataFrame:
         """The DESCRIBE HISTORY view of the transaction log: one row
         per retained version — epoch, the operation that committed it
-        (merge/delete/restore/migrate; 'merge' for legacy manifests),
-        its live partition count, and the recorded commit timestamp.
-        Driver-side O(retained manifests) JSON reads — metadata only,
-        bounded by the retention policy, never a data scan."""
+        (merge/delete/restore/migrate), its live partition count, and
+        the recorded commit timestamp. Driver-side, one JSON read per
+        retained manifest — metadata only, bounded by the retention
+        policy, never a data scan."""
         if self.snapshot_dir is None:
             raise ValueError("sink was built without snapshot_dir")
         rows = [
-            (
-                e,
-                self._manifest_op(e),
-                len(self._load_manifest(e)),
-                float(self._manifest_committed_at(e)),
-            )
+            (e, m["op"], len(m["parts"]), float(m["committed_at"]))
             for e in self.snapshots()
+            for m in (self._manifest(e),)
         ]
         return spark.createDataFrame(
             rows, "epoch long, op string, n_partitions long, committed_at double"
@@ -2198,49 +2249,29 @@ class ParquetUpsertSink:
         """The DESCRIBE DETAIL / `table_files()` metadata view: one row
         per live data file — partition, name, bytes, whether min/max
         stats and a bloom bitset cover it, and how many rows its
-        deletion vector hides. Sourced from the SAME consolidated
-        metadata the query planner reads (one JSON open; per-dir
-        fallback for pre-fold tables) plus one stat() per file for the
-        size, so the view costs O(files) metadata and never scans
-        data — the operational surface for "is this table compacted /
-        indexed / carrying delete debt?" that OPTIMIZE decisions need
-        at 100 TB."""
-        schema_ddl = (
-            "part_date string, file string, bytes long, "
-            "has_stats boolean, has_bloom boolean, dv_deleted_rows long"
-        )
-        # heal a crashed swap first — every other read path does, and
-        # without it this view could describe a mid-crash staging
-        # state; a never-written table is an empty view, not an error
-        # (ADVICE r10)
-        self._repair_for_read(spark)
-        cons = self._consolidated()
-        if cons is not None:
-            entries = dict(cons)
-        else:
-            try:
-                entries = {
-                    d: self._dir_entry(os.path.join(self.path, d))
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                }
-            except FileNotFoundError:
-                return spark.createDataFrame([], schema_ddl)
+        deletion vector hides. Sourced from the SAME snapshot the
+        query planner reads (one JSON open) plus one stat() per file
+        for the size, so the view costs O(files) metadata and never
+        scans data — the operational surface for "is this table
+        compacted / indexed / carrying delete debt?" that OPTIMIZE
+        decisions need at 100 TB. The resolver heals a crashed swap
+        first, like every read — without it this view could describe
+        a mid-crash staging state; a never-written table is an empty
+        view, not an error (ADVICE r10)."""
         rows = []
-        for d in sorted(entries):
-            e = entries[d]
+        for pdir, e in self._resolve(spark).entries.items():
             stats_files = (e.get("stats") or {}).get("files", {})
             bloom_files = (e.get("bloom") or {}).get("files", {})
             dv = e.get("dv") or {}
             for fname in e.get("files", []):
-                fpath = os.path.join(self.path, d, fname)
+                fpath = os.path.join(pdir, fname)
                 try:
                     size = os.path.getsize(fpath)
                 except OSError:
                     size = None
                 rows.append(
                     (
-                        d.split("=", 1)[1],
+                        os.path.basename(pdir).split("=", 1)[1],
                         fname,
                         size,
                         fname in stats_files,
@@ -2248,7 +2279,11 @@ class ParquetUpsertSink:
                         len(dv.get(fname, [])),
                     )
                 )
-        return spark.createDataFrame(rows, schema_ddl)
+        return spark.createDataFrame(
+            rows,
+            "part_date string, file string, bytes long, "
+            "has_stats boolean, has_bloom boolean, dv_deleted_rows long",
+        )
 
     def read_at_timestamp(self, spark: SparkSession, ts: float) -> DataFrame:
         """Time-travel read by WALL-CLOCK instant (the Delta
@@ -2272,57 +2307,6 @@ class ParquetUpsertSink:
             )
         return self.read_at(spark, eligible[-1])
 
-    def _read_snapshot_paths(
-        self,
-        spark: SparkSession,
-        paths: list[str],
-        schema_epoch: int,
-        dv_map: dict[tuple[str, str], list[int]] | None = None,
-    ) -> DataFrame:
-        """Read snapshot partition copies under the schema AS OF
-        ``schema_epoch``: partition copies referenced across an
-        evolution boundary may physically predate a column the chosen
-        version already had — the sidecar schema NULL-fills them,
-        exactly what a live read at that commit returned. part_date is
-        a directory-encoded partition column, physically absent from
-        the copied files (and from what read_at has always returned),
-        so it is dropped from the applied schema."""
-        from pyspark.sql.types import StructType
-
-        self._invalidate_listing(spark)
-        schema = self._epoch_schema(schema_epoch)
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not paths:
-            # a delete_keys commit that emptied EVERY partition (full
-            # erasure) publishes an empty manifest; that version IS the
-            # empty table, so compose it from the epoch's schema sidecar
-            # instead of handing spark.read zero paths (which raises)
-            if schema is None:
-                raise ValueError(
-                    f"epoch {schema_epoch} has an empty manifest and no "
-                    f"schema sidecar — cannot reconstruct the empty table"
-                )
-            return spark.createDataFrame([], schema)
-        if schema is None:  # pre-sidecar snapshot: homogeneous files
-            df = spark.read.parquet(*paths)
-        else:
-            df = spark.read.schema(self._physical_schema(schema)).parquet(*paths)
-        # each epoch copy carries the _dv.json AS OF that commit (the
-        # sidecar republishes via os.replace, so hardlinked copies pin
-        # the old vector) — applying it here makes time travel, CDF and
-        # history all merge-on-read-aware with zero extra machinery.
-        # Callers with a folded manifest pass dv_map (one JSON read);
-        # the per-dir sweep only runs for legacy manifests.
-        df = self._apply_dv(
-            spark, df, self._dv_map(paths) if dv_map is None else dv_map
-        )
-        # ... and the version's own logical names (column mapping):
-        # a version below a RENAME reads its original column names
-        return self._to_logical(df, schema)
-
     def read_history(self, spark: SparkSession) -> DataFrame:
         """Every retained snapshot as one DataFrame with an ``epoch``
         column — the audit/history view (one manifest resolution per
@@ -2342,20 +2326,21 @@ class ParquetUpsertSink:
             lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
         )
 
-    def read_changes(
+    def _version_diff(
         self, spark: SparkSession, from_epoch: int, to_epoch: int
-    ) -> DataFrame:
-        """Change-data-feed between two committed versions (the Delta
-        CDF ``table_changes`` shape): the post-image rows of
-        ``to_epoch`` that did not exist identically at ``from_epoch``.
-
-        Manifest-pruned: only partitions whose manifest entry CHANGED
-        between the two versions are scanned — an unchanged partition
-        has the same immutable (epoch, dir) pointer in both manifests
-        and can contribute nothing to the diff. At 100 TB this reads
-        O(changed partitions), never O(table), which is the whole
-        point of keeping the log. Within the changed partitions the
-        diff is ``exceptAll`` (multiset — duplicate-safe)."""
+    ) -> tuple[DataFrame, DataFrame | None, list[str]]:
+        """The manifest diff both change feeds share: (the TO
+        version's changed partitions, the FROM version's changed and
+        dropped partitions or None, the dropped dirnames). An
+        unchanged partition has the same immutable (epoch, dir)
+        pointer — the same copy path — in both manifests and can
+        contribute nothing, so each side scans only the paths the
+        other lacks: O(changed partitions), never O(table), which is
+        the whole point of keeping the log. Both sides read under the
+        TO version's schema so exceptAll compares aligned relations
+        across an evolution boundary; a pre-evolution row then differs
+        from its post-image exactly when the evolved column (NULL
+        before) or any value changed."""
         retained = self.snapshots()
         for epoch in (from_epoch, to_epoch):
             if epoch not in retained:
@@ -2364,40 +2349,44 @@ class ParquetUpsertSink:
                     f"(retained: {retained}, max_snapshots="
                     f"{self.max_snapshots}) — expired or never committed"
                 )
-        m_from = self._load_manifest(from_epoch)
-        m_to = self._load_manifest(to_epoch)
-        changed = sorted(d for d, e in m_to.items() if m_from.get(d) != e)
+        old = self._resolve(spark, from_epoch)
+        new = self._resolve(spark, to_epoch)
+        added = [p for p in new.entries if p not in old.entries]
+        gone = [p for p in old.entries if p not in new.entries]
+        dropped = sorted(
+            {os.path.basename(p) for p in gone}
+            - {os.path.basename(p) for p in new.entries}
+        )
+        before = dataclasses.replace(old, schema=new.schema)
+        return (
+            self._scan(spark, new, added),
+            self._scan(spark, before, gone) if gone else None,
+            dropped,
+        )
+
+    def read_changes(
+        self, spark: SparkSession, from_epoch: int, to_epoch: int
+    ) -> DataFrame:
+        """Change-data-feed between two committed versions (the Delta
+        CDF ``table_changes`` shape): the post-image rows of
+        ``to_epoch`` that did not exist identically at ``from_epoch``.
+
+        Manifest-pruned (``_version_diff``): only partitions whose
+        manifest entry CHANGED between the two versions are scanned.
+        Within the changed partitions the diff is ``exceptAll``
+        (multiset — duplicate-safe)."""
+        new, old, dropped = self._version_diff(spark, from_epoch, to_epoch)
         # a delete_keys() commit can DROP partitions; their rows (and
         # any row-level deletes inside surviving partitions) are only
         # visible through the typed feed, so the post-image-only
         # contract here must fail loudly rather than under-report
-        dropped = [d for d in m_from if d not in m_to]
         if dropped:
             raise ValueError(
                 f"partitions dropped between versions: {dropped} — a "
                 f"delete_keys() commit lies in this range; use "
                 f"read_changes_typed() for the delete-aware feed"
             )
-        if not changed:  # identical versions (e.g. an empty commit)
-            return self.read_at(spark, to_epoch).limit(0)
-        files = os.path.join(self.snapshot_dir, "files")
-        # both sides read under the TO version's schema so exceptAll
-        # compares aligned relations across an evolution boundary; a
-        # pre-evolution row then differs from its post-image exactly
-        # when the evolved column (NULL before) or any value changed
-        new = self._read_snapshot_paths(
-            spark,
-            [os.path.join(files, f"epoch={m_to[d]}", d) for d in changed],
-            to_epoch,
-        )
-        old_paths = [
-            os.path.join(files, f"epoch={m_from[d]}", d)
-            for d in changed
-            if d in m_from
-        ]
-        if not old_paths:
-            return new
-        return new.exceptAll(self._read_snapshot_paths(spark, old_paths, to_epoch))
+        return new if old is None else new.exceptAll(old)
 
     def read_changes_typed(
         self, spark: SparkSession, from_epoch: int, to_epoch: int
@@ -2414,65 +2403,15 @@ class ParquetUpsertSink:
         on the same key→partition locality as the merge (a key never
         migrates partitions), which is what makes the per-partition
         key anti-join exact."""
-        retained = self.snapshots()
-        for epoch in (from_epoch, to_epoch):
-            if epoch not in retained:
-                raise ValueError(
-                    f"epoch {epoch} is not a retained snapshot "
-                    f"(retained: {retained}, max_snapshots="
-                    f"{self.max_snapshots}) — expired or never committed"
-                )
-        m_from = self._load_manifest(from_epoch)
-        m_to = self._load_manifest(to_epoch)
-        changed = sorted(d for d, e in m_to.items() if m_from.get(d) != e)
-        dropped = sorted(d for d in m_from if d not in m_to)
-        files = os.path.join(self.snapshot_dir, "files")
-
-        def empty() -> DataFrame:  # degenerate branches only — lazy
-            return (
-                self.read_at(spark, to_epoch)
-                .limit(0)
-                .withColumn("change_type", F.lit(""))
-            )
-
-        new = (
-            self._read_snapshot_paths(
-                spark,
-                [os.path.join(files, f"epoch={m_to[d]}", d) for d in changed],
-                to_epoch,
-            )
-            if changed
-            else None
-        )
-        old_paths = [
-            os.path.join(files, f"epoch={m_from[d]}", d)
-            for d in changed
-            if d in m_from
-        ] + [os.path.join(files, f"epoch={m_from[d]}", d) for d in dropped]
-        old = (
-            self._read_snapshot_paths(spark, old_paths, to_epoch)
-            if old_paths
-            else None
-        )
-        if new is None and old is None:  # identical versions
-            return empty()
-        upserts = (
-            (new.exceptAll(old) if old is not None else new).withColumn(
-                "change_type", F.lit("upsert")
-            )
-            if new is not None
-            else empty()
+        new, old, _ = self._version_diff(spark, from_epoch, to_epoch)
+        upserts = (new if old is None else new.exceptAll(old)).withColumn(
+            "change_type", F.lit("upsert")
         )
         if old is None:
             return upserts
-        new_keys = (
-            new.select(*self.key_cols)
-            if new is not None
-            else old.select(*self.key_cols).limit(0)
-        )
-        deletes = self._anti_join_keys(old, new_keys).withColumn(
-            "change_type", F.lit("delete")
-        )
+        deletes = self._anti_join_keys(
+            old, new.select(*self.key_cols)
+        ).withColumn("change_type", F.lit("delete"))
         return upserts.unionByName(deletes)
 
     def _stage_merge(
@@ -3114,39 +3053,10 @@ class ParquetUpsertSink:
         if self.snapshot_dir is not None:
             spark.catalog.refreshByPath(self.snapshot_dir)
 
-    def _read_table(
-        self,
-        spark: SparkSession,
-        apply_dv: bool = True,
-        with_positions: bool = False,
-    ) -> DataFrame:
-        """Read the live table under the authoritative schema: after an
-        evolution commit only the touched partitions physically carry
-        the new column, and a footer-sampled read could silently drop
-        it; the explicit schema makes every file NULL-fill what it
-        lacks (one tiny JSON read — never a footer sweep). Deletion
-        vectors are applied unless ``apply_dv=False`` (the DV delete's
-        own discovery scan, which needs the raw positions)."""
-        self._invalidate_listing(spark)
-        schema = self._stored_schema()
-        reader = (
-            spark.read
-            if schema is None
-            else spark.read.schema(self._physical_schema(schema))
-        )
-        df = reader.parquet(self.path)
-        if with_positions:
-            # the DV delete's positional probe: _metadata must bind
-            # while df is still the raw scan (mutually exclusive with
-            # apply_dv, whose anti-join names would collide)
-            df = df.withColumn(
-                "__dv_path", F.col("_metadata.file_path")
-            ).withColumn("__dv_pos", F.col("_metadata.row_index"))
-        if apply_dv:
-            # DV application first, while df is still the raw scan and
-            # the hidden _metadata column resolves
-            df = self._apply_dv(spark, df, self._live_dv_map())
-        return self._to_logical(df, schema)
+    def _read_table(self, spark: SparkSession) -> DataFrame:
+        """The writer-side read: the live table, deletion vectors
+        applied, ``part_date`` kept."""
+        return self._scan(spark, self._resolve(spark), keep_part_date=True)
 
     def _compact_staging(self) -> str:
         return self.path.rstrip("/") + "__compact"
@@ -3161,8 +3071,7 @@ class ParquetUpsertSink:
         (reader rmtree-ing a partition the writer just installed —
         permanent loss). If a live writer holds the lock, the repair
         is ITS job — skip and read."""
-        self._repair_for_read(spark)
-        return self._read_table(spark).drop("part_date")
+        return self._scan(spark, self._resolve(spark))
 
     def _repair_for_read(self, spark: SparkSession) -> None:
         """Finish a crashed compaction/migration swap before serving a
@@ -3623,17 +3532,11 @@ class ParquetUpsertSink:
                 }
             # -- rewrite (NO lock: reads only the immutable pin) ------
             schema = self._stored_schema()
-            reader = spark.read.option("basePath", pin_root)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            spark.catalog.refreshByPath(pin_root)
-            df = reader.parquet(*[os.path.join(pin_root, d) for d in dirs])
-            df = self._apply_dv(
+            df = self._scan(
                 spark,
-                df,
-                self._dv_map([os.path.join(pin_root, d) for d in dirs]),
+                self._resolve(spark, pin=(pin_root, schema)),
+                keep_part_date=True,
             )
-            df = self._to_logical(df, schema)
             data_cols = list(df.columns)
             if zorder_by is not None:
                 n_ranges = max(1, files_per_partition * len(dirs))
@@ -4036,13 +3939,9 @@ class ParquetUpsertSink:
             # constraint added mid-flight flips the metadata
             # fingerprint and forces this re-audit via retry)
             self._audit_batch(staged)
-            pin_dirs = [
-                os.path.join(pin_root, d)
-                for d in touched
-                if os.path.isdir(os.path.join(pin_root, d))
-            ]
-            if pin_dirs:
-                existing = self._read_pinned(spark, pin_root, pin_dirs, schema)
+            pin = self._resolve(spark, pin=(pin_root, schema))
+            if pin.entries:
+                existing = self._scan(spark, pin, keep_part_date=True)
                 keep = self._anti_join_keys(
                     existing, staged.select(*self.key_cols)
                 )
@@ -4066,18 +3965,6 @@ class ParquetUpsertSink:
             on_staged=on_staged,
             writer_id=writer_id,
         )
-
-    def _read_pinned(
-        self, spark: SparkSession, pin_root: str, pin_dirs: list[str], schema
-    ) -> DataFrame:
-        """The pinned partitions' current LOGICAL rows (deletion
-        vectors folded) — the stable read side of an OCC merge."""
-        reader = spark.read.option("basePath", pin_root)
-        if schema is not None:
-            reader = reader.schema(self._physical_schema(schema))
-        df = reader.parquet(*pin_dirs)
-        df = self._apply_dv(spark, df, self._dv_map(pin_dirs))
-        return self._to_logical(df, schema)
 
     def _occ_commit(
         self,
@@ -4384,19 +4271,12 @@ class ParquetUpsertSink:
         out_cols = [f.name for f in schema.fields] if schema else None
 
         def stage_merge_clauses(pin_root: str, merged_dir: str) -> None:
-            pin_dirs = [
-                os.path.join(pin_root, d)
-                for d in touched
-                if os.path.isdir(os.path.join(pin_root, d))
-            ]
-            if pin_dirs:
-                scoped = self._read_pinned(spark, pin_root, pin_dirs, schema)
-            else:
-                scoped = (
-                    spark.createDataFrame([], schema)
-                    if schema is not None
-                    else staged.limit(0)
-                )
+            # an empty pin composes the empty relation from the schema
+            scoped = self._scan(
+                spark,
+                self._resolve(spark, pin=(pin_root, schema)),
+                keep_part_date=True,
+            )
             out = self._apply_merge_clauses(
                 scoped,
                 staged,
@@ -4428,8 +4308,10 @@ class ParquetUpsertSink:
             writer_id=writer_id,
         )
 
-    def _phys_name_of(self, logical: str) -> str:
-        schema = self._stored_schema()
+    def _phys_name_of(self, logical: str, schema=None) -> str:
+        """The physical name of a logical column under ``schema``
+        (default: the stored table schema)."""
+        schema = self._stored_schema() if schema is None else schema
         if schema is not None:
             for f in schema.fields:
                 if f.name == logical:
@@ -4536,7 +4418,8 @@ class ParquetUpsertSink:
                 },
             )
 
-    def _partition_disjoint(self, dirname: str, lower, upper) -> bool:
+    @staticmethod
+    def _partition_disjoint(dirname: str, lower, upper) -> bool:
         """True only when the partition dir's time period PROVABLY
         does not overlap [lower, upper] on the partition source — the
         first pruning axis, composed in front of the per-file checks.
@@ -4544,7 +4427,11 @@ class ParquetUpsertSink:
         layout (YYYY / YYYY-MM / YYYY-MM-DD); an unparseable value or
         the NULL partition is never skipped when it could matter
         (NULL never satisfies a bound, so bounds exclude it; with no
-        bounds everything is read)."""
+        bounds everything is read). Dir periods are naive UTC: the
+        partition value derives under the session time zone, which
+        ``session.configure_runtime`` pins to UTC, so a timezone-aware
+        bound converts to naive UTC here — the one place bounds meet
+        dir periods."""
         import datetime as _dtm
 
         if lower is None and upper is None:
@@ -4572,6 +4459,8 @@ class ParquetUpsertSink:
             return False  # unknown layout: must read
         def _ts(b):
             if isinstance(b, _dtm.datetime):
+                if b.tzinfo is not None:
+                    return b.astimezone(_dtm.timezone.utc).replace(tzinfo=None)
                 return b
             if isinstance(b, _dtm.date):
                 return _dtm.datetime(b.year, b.month, b.day)
@@ -4628,99 +4517,15 @@ class ParquetUpsertSink:
         one."""
         if lower is None and upper is None:
             raise ValueError("read_pruned needs at least one bound")
-        self._repair_for_read(spark)
-        schema = self._stored_schema()
-        phys = self._phys_name_of(column)
-        # ONE metadata read plans the whole scan (file lists, stats,
-        # deletion vectors all come from the consolidated cache —
-        # VERDICT r9 item 4); pre-fold tables fall back to per-dir reads
-        cons = self._consolidated()
-        if cons is not None:
-            entries = {os.path.join(self.path, d): e for d, e in cons.items()}
-        else:
-            entries = self._entries_for_dirs(
-                [
-                    os.path.join(self.path, d)
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                ]
-            )
-        skipped_files = 0
-        if source_lower is not None or source_upper is not None:
-            eligible = {}
-            for pdir, e in entries.items():
-                if self._partition_disjoint(
-                    os.path.basename(pdir.rstrip("/")), source_lower, source_upper
-                ):
-                    skipped_files += len(e.get("files", []))
-                else:
-                    eligible[pdir] = e
-            entries = eligible
-        chosen, total = self._select_files_from_entries(
-            entries, phys, lower, upper
+        return self._read_selected(
+            spark,
+            self._resolve(spark),
+            column,
+            lower,
+            upper,
+            source_lower=source_lower,
+            source_upper=source_upper,
         )
-        total += skipped_files
-        self._invalidate_listing(spark)
-        if not chosen:
-            base = self._read_table(spark).limit(0)
-        else:
-            reader = spark.read.option("basePath", self.path)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        pred = self._source_bound_pred(source_lower, source_upper)
-        if lower is not None:
-            pred = pred & (F.col(column) >= F.lit(lower))
-        if upper is not None:
-            pred = pred & (F.col(column) <= F.lit(upper))
-        return base.filter(pred).drop("part_date"), len(chosen), total
-
-    @staticmethod
-    def _select_files_from_entries(
-        entries: dict[str, dict], phys: str, lower, upper
-    ) -> tuple[list[str], int]:
-        """(chosen file paths, total file count) over consolidated
-        metadata entries (dir path -> {files, stats, dv}) under the
-        [lower, upper] bound on the PHYSICAL column — the shared
-        file-skipping core of ``read_pruned`` and ``read_pruned_at``.
-        Pure in-memory planning: the entries came from ONE JSON read
-        (live cache or manifest fold). Files or dirs without
-        applicable stats are always chosen (safe degradation)."""
-        chosen: list[str] = []
-        total = 0
-        for pdir in sorted(entries):
-            e = entries[pdir]
-            # dir-level zone map first: a dir whose folded [lo, hi] is
-            # disjoint from the bound dismisses ALL its files in O(1)
-            # — plan CPU is O(dirs + files of candidate dirs), not
-            # O(table files) (the fold exists only when every file is
-            # stats-covered, so this can never skip an uncovered file)
-            dr = (e.get("range") or {}).get(phys)
-            if dr is not None and (
-                (upper is not None and dr[0] > upper)
-                or (lower is not None and dr[1] < lower)
-            ):
-                total += len(e.get("files", []))
-                continue
-            stats = None
-            s = e.get("stats")
-            if s and phys in s.get("columns", []):
-                stats = s.get("files", {})
-            for fname in e.get("files", []):
-                total += 1
-                rng = (
-                    stats.get(fname, {}).get(phys) if stats is not None else None
-                )
-                if rng is not None:
-                    lo, hi = rng
-                    if (upper is not None and lo > upper) or (
-                        lower is not None and hi < lower
-                    ):
-                        continue  # provably disjoint: skip the file
-                chosen.append(os.path.join(pdir, fname))
-        return chosen, total
 
     def read_pruned_at(
         self,
@@ -4740,52 +4545,160 @@ class ParquetUpsertSink:
         the evolution boundary."""
         if lower is None and upper is None:
             raise ValueError("read_pruned_at needs at least one bound")
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        schema = self._epoch_schema(eligible[-1])
-        phys = column
-        if schema is not None:
-            for f in schema.fields:
-                if f.name == column:
-                    phys = self._physical_name(f)
-        # plan from the manifest's FOLDED metadata (the same one JSON
-        # read that resolved the parts); a dir absent from the fold
-        # (legacy manifest) degrades to a per-dir listing for just it
-        folded = self._load_manifest_sidecars(eligible[-1]) or {}
-        entries = {}
-        for d, e in sorted(manifest.items()):
-            pdir = os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            entries[pdir] = folded.get(d) or self._dir_entry(pdir)
-        chosen, total = self._select_files_from_entries(
-            entries, phys, lower, upper
+        return self._read_selected(
+            spark, self._resolve(spark, epoch_id), column, lower, upper
         )
-        self._invalidate_listing(spark)
-        from pyspark.sql.types import StructType
 
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not chosen:
-            base = self.read_at(spark, epoch_id).limit(0)
-        else:
-            reader = (
-                spark.read
-                if schema is None
-                else spark.read.schema(self._physical_schema(schema))
-            )
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        pred = F.lit(True)
+    def _read_selected(
+        self,
+        spark: SparkSession,
+        snap: _Snapshot,
+        column: str,
+        lower=None,
+        upper=None,
+        values: list | None = None,
+        source_lower=None,
+        source_upper=None,
+    ) -> tuple[DataFrame, int, int]:
+        """Plan a pruned (``lower``/``upper``) or point (``values``)
+        read of one snapshot — live or a version, the same code: the
+        snapshot's own schema resolves ``column`` to its physical name
+        (so pruning composes with renames), the one walk selects the
+        files, and every bound re-applies as a predicate on the
+        composed scan, so results never depend on the sidecars.
+        Returns (DataFrame, files_selected, files_total)."""
+        phys = self._phys_name_of(column, snap.schema)
+        chosen, total = self._select_files_from_entries(
+            snap.entries, phys, lower, upper, values, source_lower, source_upper
+        )
+        pred = self._source_bound_pred(source_lower, source_upper)
+        if values is not None:
+            pred = pred & F.col(column).isin(values)
         if lower is not None:
             pred = pred & (F.col(column) >= F.lit(lower))
         if upper is not None:
             pred = pred & (F.col(column) <= F.lit(upper))
-        return base.filter(pred), len(chosen), total
+        return self._scan(spark, snap, chosen, pred), len(chosen), total
+
+    @classmethod
+    def _select_files_from_entries(
+        cls,
+        entries: dict[str, dict],
+        phys: str,
+        lower=None,
+        upper=None,
+        values: list | None = None,
+        source_lower=None,
+        source_upper=None,
+    ) -> tuple[list[str], int]:
+        """(chosen file paths, total file count): the one file-selection
+        walk behind every pruned and point read. Pure in-memory
+        planning over a snapshot's entries (dir path -> {files, stats,
+        bloom, range}), which came from ONE JSON read (live cache or
+        manifest fold). A range read is one probe interval [lower,
+        upper] on the PHYSICAL column; a point read (``values``) is
+        one [v, v] probe per value. Three tiers, each degrading to
+        must-read when its metadata is missing or incomparable with
+        the probe:
+
+        1. the dir's partition period against the ``source_*`` bounds
+           (``_partition_disjoint``) — a disjoint dir is skipped whole;
+        2. the dir-level zone map: a dir whose folded [lo, hi] admits
+           no probe dismisses ALL its files in O(1) — plan CPU is
+           O(dirs + files of candidate dirs), not O(table files) (the
+           fold exists only when every file is stats-covered, so this
+           can never skip an uncovered file);
+        3. per file, a probe stays alive only while the min/max range
+           admits it AND (point reads) the bloom bitset might contain
+           it (k unset bits = provably absent); a file with no live
+           probe is provably irrelevant."""
+        import base64
+
+        probes = (
+            [(v, v) for v in values] if values is not None else [(lower, upper)]
+        )
+
+        def admitted(rng, alive: list[int]) -> list[int]:
+            lo, hi = rng
+            try:
+                return [
+                    i
+                    for i in alive
+                    if not (
+                        (probes[i][1] is not None and lo > probes[i][1])
+                        or (probes[i][0] is not None and hi < probes[i][0])
+                    )
+                ]
+            except TypeError:
+                return alive  # incomparable probe/stat types: must read
+
+        # a probe value whose Python str() may not match Spark's
+        # string CAST (anything but int/str — bool is an int subclass
+        # but renders 'True' vs 'true') must never be bloom-skipped:
+        # the bitset was built from the CAST rendering, so a mismatch
+        # would wrongly prove absence. Such values degrade to the
+        # stats axis + must-read (ADVICE r10).
+        bloomable = [
+            isinstance(v, str)
+            or (isinstance(v, int) and not isinstance(v, bool))
+            for v in values or []
+        ]
+        chosen: list[str] = []
+        total = 0
+        pos_cache: dict[tuple[int, int], list[list[int]]] = {}
+        for pdir in sorted(entries):
+            e = entries[pdir]
+            files = e.get("files", [])
+            total += len(files)
+            if cls._partition_disjoint(
+                os.path.basename(pdir.rstrip("/")), source_lower, source_upper
+            ):
+                continue
+            dr = (e.get("range") or {}).get(phys)
+            if dr is not None and not admitted(dr, list(range(len(probes)))):
+                continue
+            stats = None
+            s = e.get("stats")
+            if s and phys in s.get("columns", []):
+                stats = s.get("files", {})
+            bloom = e.get("bloom") if values is not None else None
+            bcols = (bloom or {}).get("columns", {})
+            bfiles = (bloom or {}).get("files", {})
+            k_hashes = (bcols.get(phys) or {}).get("k")
+            for fname in files:
+                alive = list(range(len(probes)))
+                rng = (
+                    stats.get(fname, {}).get(phys)
+                    if stats is not None
+                    else None
+                )
+                if rng is not None:
+                    alive = admitted(rng, alive)
+                b64 = (
+                    bfiles.get(fname, {}).get(phys) if k_hashes else None
+                )
+                if b64 is not None and alive:
+                    bits = base64.b64decode(b64)
+                    # m recovers from the bitset length, so blooms of
+                    # different (auto-sized) m coexist across rebuilds
+                    key = (len(bits) * 8, k_hashes)
+                    if key not in pos_cache:
+                        pos_cache[key] = [
+                            cls._bloom_positions_py(v, key[0], k_hashes)
+                            for v in values
+                        ]
+                    probe = pos_cache[key]
+                    alive = [
+                        i
+                        for i in alive
+                        if not bloomable[i]
+                        or all(
+                            bits[p >> 3] & (1 << (p & 7)) for p in probe[i]
+                        )
+                    ]
+                if alive:
+                    chosen.append(os.path.join(pdir, fname))
+        return chosen, total
 
     # -- recorded clustering (the liquid-clustering UX, r10) -----------------
     def _clustering_file(self) -> str:
@@ -5238,138 +5151,14 @@ class ParquetUpsertSink:
             raise ValueError("read_point needs at least one probe value")
         if any(v is None for v in values):
             raise ValueError("NULL never matches an IN probe")
-        self._repair_for_read(spark)
-        schema = self._stored_schema()
-        phys = self._phys_name_of(column)
-        cons = self._consolidated()
-        if cons is not None:
-            entries = {os.path.join(self.path, d): e for d, e in cons.items()}
-        else:
-            entries = self._entries_for_dirs(
-                [
-                    os.path.join(self.path, d)
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                ]
-            )
-        skipped_files = 0
-        if source_lower is not None or source_upper is not None:
-            eligible = {}
-            for pdir, e in entries.items():
-                if self._partition_disjoint(
-                    os.path.basename(pdir.rstrip("/")), source_lower, source_upper
-                ):
-                    skipped_files += len(e.get("files", []))
-                else:
-                    eligible[pdir] = e
-            entries = eligible
-        chosen, total = self._select_files_point(entries, phys, values)
-        total += skipped_files
-        self._invalidate_listing(spark)
-        if not chosen:
-            base = self._read_table(spark).limit(0)
-        else:
-            reader = spark.read.option("basePath", self.path)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        return (
-            base.filter(
-                self._source_bound_pred(source_lower, source_upper)
-                & F.col(column).isin(values)
-            ).drop("part_date"),
-            len(chosen),
-            total,
+        return self._read_selected(
+            spark,
+            self._resolve(spark),
+            column,
+            values=values,
+            source_lower=source_lower,
+            source_upper=source_upper,
         )
-
-    @classmethod
-    def _select_files_point(
-        cls, entries: dict[str, dict], phys: str, values: list
-    ) -> tuple[list[str], int]:
-        """(chosen file paths, total files) for an IN probe over
-        consolidated metadata entries — the shared point-selection
-        core of ``read_point`` and ``read_point_at``. Per file, a
-        probe value stays alive only while the min/max range admits
-        it AND the bloom bitset might contain it; a file with no
-        live value is provably irrelevant. Missing metadata always
-        degrades to reading the file."""
-        import base64
-
-        chosen: list[str] = []
-        total = 0
-        pos_cache: dict[tuple[int, int], list[list[int]]] = {}
-        # a probe value whose Python str() may not match Spark's
-        # string CAST (anything but int/str — bool is an int subclass
-        # but renders 'True' vs 'true') must never be bloom-skipped:
-        # the bitset was built from the CAST rendering, so a mismatch
-        # would wrongly prove absence. Such values degrade to the
-        # stats axis + must-read (ADVICE r10).
-        bloomable = [
-            isinstance(v, str)
-            or (isinstance(v, int) and not isinstance(v, bool))
-            for v in values
-        ]
-        for pdir in sorted(entries):
-            e = entries[pdir]
-            # dir-level zone map: if no probe value can live in this
-            # dir's folded [lo, hi], dismiss all its files in O(1)
-            dr = (e.get("range") or {}).get(phys)
-            if dr is not None:
-                try:
-                    if not any(dr[0] <= v <= dr[1] for v in values):
-                        total += len(e.get("files", []))
-                        continue
-                except TypeError:
-                    pass  # incomparable probe/stat types: full check
-            stats = None
-            s = e.get("stats")
-            if s and phys in s.get("columns", []):
-                stats = s.get("files", {})
-            bloom = e.get("bloom")
-            bcols = (bloom or {}).get("columns", {})
-            bfiles = (bloom or {}).get("files", {})
-            k_hashes = (bcols.get(phys) or {}).get("k")
-            for fname in e.get("files", []):
-                total += 1
-                alive = list(range(len(values)))
-                rng = (
-                    stats.get(fname, {}).get(phys)
-                    if stats is not None
-                    else None
-                )
-                if rng is not None:
-                    lo, hi = rng
-                    try:
-                        alive = [i for i in alive if lo <= values[i] <= hi]
-                    except TypeError:
-                        pass  # incomparable probe/stat types: must read
-                b64 = (
-                    bfiles.get(fname, {}).get(phys) if k_hashes else None
-                )
-                if b64 is not None and alive:
-                    bits = base64.b64decode(b64)
-                    # m recovers from the bitset length, so blooms of
-                    # different (auto-sized) m coexist across rebuilds
-                    key = (len(bits) * 8, k_hashes)
-                    if key not in pos_cache:
-                        pos_cache[key] = [
-                            cls._bloom_positions_py(v, key[0], k_hashes)
-                            for v in values
-                        ]
-                    probe = pos_cache[key]
-                    alive = [
-                        i
-                        for i in alive
-                        if not bloomable[i]
-                        or all(
-                            bits[p >> 3] & (1 << (p & 7)) for p in probe[i]
-                        )
-                    ]
-                if alive:
-                    chosen.append(os.path.join(pdir, fname))
-        return chosen, total
 
     def read_point_at(
         self, spark: SparkSession, epoch_id: int, column: str, values: list
@@ -5387,42 +5176,9 @@ class ParquetUpsertSink:
             raise ValueError("read_point_at needs at least one probe value")
         if any(v is None for v in values):
             raise ValueError("NULL never matches an IN probe")
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        schema = self._epoch_schema(eligible[-1])
-        phys = column
-        if schema is not None:
-            for f in schema.fields:
-                if f.name == column:
-                    phys = self._physical_name(f)
-        folded = self._load_manifest_sidecars(eligible[-1]) or {}
-        entries = {}
-        for d, e in sorted(manifest.items()):
-            pdir = os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            entries[pdir] = folded.get(d) or self._dir_entry(pdir)
-        chosen, total = self._select_files_point(entries, phys, values)
-        self._invalidate_listing(spark)
-        from pyspark.sql.types import StructType
-
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not chosen:
-            base = self.read_at(spark, epoch_id).limit(0)
-        else:
-            reader = (
-                spark.read
-                if schema is None
-                else spark.read.schema(self._physical_schema(schema))
-            )
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        return base.filter(F.col(column).isin(values)), len(chosen), total
+        return self._read_selected(
+            spark, self._resolve(spark, epoch_id), column, values=values
+        )
 
     def _finish_compact(self, staging: str) -> None:
         """Swap every partition out of a COMPLETE compaction staging

@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime as dt
 from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -785,6 +786,15 @@ def test_batch_topk_masked_screen_is_lossless(spark, data):
             .collect()
         )
     assert got == sorted(expected), (got, sorted(expected))
+    # a query id missing from query_masks, or mapped to an empty
+    # mask, is refused by name (not a bare KeyError / an empty screen)
+    qid = next(iter(masks))
+    rest = {q: v for q, v in masks.items() if q != qid}
+    for bad in (rest, {**rest, qid: []}):
+        with pytest.raises(ValueError, match=rf"id\(s\) \[{qid}\]"):
+            sim.brute_force_topk_batch(
+                df, qdf, k=k, mask_col="cell", query_masks=bad
+            )
 
 
 def test_batch_topk_zero_norm_vectors_do_not_poison_screen(spark):

@@ -2465,6 +2465,14 @@ def test_read_pruned_at_prunes_the_versions_own_files(spark, tmp_path):
     # the DV'd row is hidden at 2 but present at 1
     assert sink.read_pruned_at(spark, 1, "total", lower=399)[0].count() == 1
     assert sink.read_pruned_at(spark, 2, "total", lower=399)[0].count() == 0
+    # latest is just the newest snapshot: the live read selects the
+    # same files and returns the same rows as a read at epoch 2
+    live, sel, tot = sink.read_pruned(spark, "total", lower=300)
+    at, sel_at, tot_at = sink.read_pruned_at(spark, 2, "total", lower=300)
+    assert (sel, tot) == (sel_at, tot_at)
+    assert live.exceptAll(at).count() == 0 and at.exceptAll(live).count() == 0
+    with pytest.raises(ValueError, match="retention horizon"):
+        sink.read_pruned_at(spark, -1, "total", lower=300)
 
 
 # -- consolidated plan-time metadata (r10: one JSON read per plan) ----------
@@ -4346,6 +4354,14 @@ def test_read_point_at_travels_with_bloom_and_rename(spark, tmp_path):
     # the LIVE probe on k sees the poison under the NEW value name
     live, _, _ = sink.read_point(spark, "k", [7])
     assert [r["amount"] for r in live.collect()] == [-1]
+    # latest is just the newest snapshot (epoch 3, the rename): same
+    # rows and the same (selected, total) as the live probe
+    live, sel, tot = sink.read_point(spark, "k", [7, 399])
+    at, sel_at, tot_at = sink.read_point_at(spark, 3, "k", [7, 399])
+    assert (sel, tot) == (sel_at, tot_at)
+    assert sorted(map(tuple, live.collect())) == sorted(map(tuple, at.collect()))
+    with pytest.raises(ValueError, match="retention horizon"):
+        sink.read_point_at(spark, -1, "k", [7])
 
 
 def test_describe_files_reports_layout_and_debt(spark, tmp_path):
@@ -4509,6 +4525,23 @@ def test_partition_axis_composes_with_file_skipping(spark, tmp_path):
     # k=2 falls on 2024-01-03 (in range), k=3999 on 2024-01-08 (out)
     assert [r["k"] for r in pg.collect()] == [2]
     assert ps < pt
+    # the same bounds as timezone-aware instants (UTC and +05:00)
+    # select the same files and rows as the naive-UTC ones
+    utc, plus5 = dt.timezone.utc, dt.timezone(dt.timedelta(hours=5))
+    want_rows = sorted(map(tuple, got.collect()))
+    for tz in (utc, plus5):
+        alo = lo.replace(tzinfo=utc).astimezone(tz)
+        ahi = hi.replace(tzinfo=utc).astimezone(tz)
+        agot, asel, atot = sink.read_pruned(
+            spark, "v", lower=990, source_lower=alo, source_upper=ahi
+        )
+        assert (asel, atot) == (sel, tot)
+        assert sorted(map(tuple, agot.collect())) == want_rows
+        apg, aps, apt = sink.read_point(
+            spark, "k", [2, 3999], source_lower=alo, source_upper=ahi
+        )
+        assert (aps, apt) == (ps, pt)
+        assert [r["k"] for r in apg.collect()] == [2]
     # no bounds: unchanged behavior
     allp, s0, t0 = sink.read_pruned(spark, "v", lower=990)
     assert allp.count() == full.filter("v >= 990").count()
